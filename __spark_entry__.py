@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from schema_drift_detector_spark.functions.text import portable_hash60_sql
 from schema_drift_detector_spark.operators.sampling import hash_bucket_sql
+from schema_drift_detector_spark.plans import corpus
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
@@ -40,7 +41,12 @@ def _ckpt_parallel(*dfs: DataFrame) -> list[DataFrame]:
     tail of one materialization with tasks from the next). Used by the
     merged board entries whose faces were checkpointed one after
     another — the faces share no lineage, so serializing their
-    materializations only serialized idle capacity."""
+    materializations only serialized idle capacity.
+
+    Assumes PySpark's pinned-thread mode (the default since 3.2), where
+    each Python thread gets its own JVM thread and so its own job-group
+    and description properties. A failing frame raises only after the
+    pool joins: its siblings' jobs run to completion first."""
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=len(dfs)) as pool:
@@ -49,8 +55,8 @@ def _ckpt_parallel(*dfs: DataFrame) -> list[DataFrame]:
 
 def _first_parallel(*dfs: DataFrame) -> list:
     """``df.first()`` over several independent (typically gate-
-    aggregation) frames concurrently — same §2.6 rationale as
-    _ckpt_parallel."""
+    aggregation) frames concurrently — same §2.6 rationale, and the same
+    pinned-thread assumption and failure behavior, as _ckpt_parallel."""
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=len(dfs)) as pool:
@@ -76,9 +82,8 @@ def _t_fan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     aggregation queries keep the plain scan (the extra exchange costs
     more than 1-task scanning saves there — measured both ways)."""
     df = _t(spark, sf_dir, name)
-    parallelism = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < parallelism:
-        df = df.repartition(parallelism)
+    if corpus.small_input(df):
+        df = df.repartition(spark.sparkContext.defaultParallelism)
     return df
 
 
@@ -104,8 +109,14 @@ def _t_fan_big(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     both ways at sf0.1 AND sf1.0 (see _FAN_MIN_BYTES). The always-fan
     ``_t_fan`` stays for the queries that win at every measured size
     (per-token md5 pipelines: jaccard shingles, repetition features,
-    PII regex chains)."""
+    PII regex chains).
+
+    Fails closed: when the size cannot be read from the local file
+    system (an OSError, or any URI such as s3:// or hdfs://), the plain
+    scan is returned."""
     path = f"{sf_dir}/{name}.parquet"
+    if "://" in path:
+        return _t(spark, sf_dir, name)
     try:
         if os.path.isfile(path):
             size = os.path.getsize(path)
@@ -116,8 +127,8 @@ def _t_fan_big(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 if f.endswith(".parquet")
             )
     except OSError:
-        size = None
-    if size is not None and size < _FAN_MIN_BYTES:
+        return _t(spark, sf_dir, name)
+    if size < _FAN_MIN_BYTES:
         return _t(spark, sf_dir, name)
     return _t_fan(spark, sf_dir, name)
 
@@ -6240,42 +6251,24 @@ def q_corpus_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-column pack fold; the LM stage's model tables broadcast, its
     only wide exchange the per-doc mean). The composition adds ONE
     extra join (chunk_fp back onto the pack manifest, key
-    co-partitioned)."""
-    from schema_drift_detector_spark.functions.pii import pii_redact
-    from schema_drift_detector_spark.functions.text import token_count
-    from schema_drift_detector_spark.operators.cleaning import gopher_quality_filter
-    from schema_drift_detector_spark.operators.decontam import (
-        contamination_hits,
-        eval_gram_hashes,
-    )
-    from schema_drift_detector_spark.operators.dedup import (
-        connected_components,
-        drop_exact_duplicates,
-        minhash_near_duplicates,
-    )
-    from schema_drift_detector_spark.operators.packing import (
-        chunk_documents,
-        pack_next_fit,
-    )
-    from schema_drift_detector_spark.operators.quality_lm import (
-        lm_perplexity,
-        ppl_tiers,
-    )
-    from schema_drift_detector_spark.operators.sampling import (
-        hash_bucket,
-        take_token_budget,
-    )
-    from schema_drift_detector_spark.operators.substring import (
-        strip_repeated_runs,
-        substring_dedup,
-    )
+    co-partitioned).
+
+    The stage list, each stage's operator call and the materialization
+    rule are ``plans/corpus.py``'s, the same composition
+    ``examples/corpus_prep_job.py`` ships; this entry adds only the
+    planted fixtures, the clone family and the binding gates."""
+    from schema_drift_detector_spark.operators.sampling import hash_bucket
 
     head10 = F.array_join(F.slice(F.split(F.col("text"), " "), 1, 10), " ")
+    scan = _t(spark, sf_dir, "documents")
+    small = corpus.small_input(scan)
     # fan-out scan (r8): the whole head of the pipeline — URL verdict,
     # clone fixture, Arrow normalization, Gopher metrics — is a
     # zero-shuffle chain inheriting the scan's parallelism, which is
     # 1-2 tasks on the small compressed input (see _t_fan)
-    raw = _t_fan(spark, sf_dir, "documents").select(
+    if small:
+        scan = scan.repartition(spark.sparkContext.defaultParallelism)
+    raw = scan.select(
         "doc_id",
         "source",
         F.concat(
@@ -6297,15 +6290,9 @@ def q_corpus_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).otherwise(F.lit("")),
         ).alias("text"),
     )
-    # stage -1 (late r7): URL governance — real web pipelines filter at
-    # the CRAWL-RECORD granularity before any text work (RefinedWeb
-    # §3.1: blocklist + keyword scoring). Runs BEFORE cloning so a
-    # clone family shares one URL fate and the exact-dedup gates below
-    # stay well-defined. Planted URLs: %23 hits the domain blocklist,
-    # %29 the soft-keyword threshold, the rest pass. Codegen scan,
-    # zero shuffle.
-    from schema_drift_detector_spark.functions.urlmeta import url_verdict
-
+    # Planted URLs: %23 hits the domain blocklist, %29 the soft-keyword
+    # threshold, the rest pass. The eval set is a 4% hash sample of the
+    # redacted corpus cut to 200 characters, so those docs contaminate.
     d = F.col("doc_id")
     url_expr = F.concat(
         F.when(d % 23 == 0, F.lit("https://www.Evil-Ads.example/e/"))
@@ -6313,8 +6300,19 @@ def q_corpus_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("https://docs.example.org/d/")),
         d.cast("string"),
     )
-    raw_urled = raw.withColumn(
-        "__uv", url_verdict(url_expr, _URL_BLOCK, _URL_HARD, _URL_SOFT, _URL_TH)
+    url = corpus.UrlRules(url_expr, _URL_BLOCK, _URL_HARD, _URL_SOFT, _URL_TH)
+    steps = corpus.stages(
+        small=small,
+        min_stopword_hits=1,  # the synthetic vocabulary has one Gopher stopword
+        mix=400,
+        chunk_tokens=24,
+        stride=12,
+        pack_cap=40,
+        shards=8,
+        url=url,
+        eval_docs=lambda red: red.filter(
+            hash_bucket("doc_id", salt=":eval") < 40_000
+        ).select(F.substring("text", 1, 200).alias("text")),
     )
     # ONE scan answers three former jobs (r8: the URL-verdict histogram,
     # the max-doc_id fixture guard, and n_base) — the per-verdict rows
@@ -6323,7 +6321,7 @@ def q_corpus_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (guide §1.2: remove passes before tuning anything else)
     uvrows = {
         r["__uv"]: r
-        for r in raw_urled.groupBy("__uv")
+        for r in raw.groupBy(url.verdict().alias("__uv"))
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.max("doc_id").alias("mx"),
@@ -6337,7 +6335,10 @@ def q_corpus_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"vacuous URL stage: a verdict branch never fired or nothing "
             f"survived ({uvc})"
         )
-    raw = raw_urled.filter(F.col("__uv").isNull()).drop("__uv")
+    # URL governance runs BEFORE cloning (the RefinedWeb crawl-record
+    # ordering), so a clone family shares one URL fate and the
+    # exact-dedup gates below stay well-defined
+    raw = corpus.run(raw, steps[:1])
 
     max_id = uvrows[None]["mx"]
     if max_id is None or max_id >= 1_000_000:
@@ -6359,171 +6360,60 @@ def q_corpus_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # computed, derived from the one scan above
     n_base = uvrows[None]["n"] + uvrows[None]["ncl"]
 
-    # stage 0 (r7): Unicode normalization — the hygiene pass that runs
-    # BEFORE any fingerprinting, because un-normalized text makes
-    # identical documents hash differently and silently defeats every
-    # downstream dedup/decontamination gram identity. Zero-shuffle
-    # Arrow scan; the %10 original/clone pair above is byte-unequal
-    # until this stage unifies it.
-    from schema_drift_detector_spark.functions.normalize import normalize_text_arrow
-
-    base = base.select(
-        "doc_id", "source", normalize_text_arrow("text").alias("text")
-    )
-
-    # stage 1 (r7): Gopher quality filter — the hygiene gate a corpus
-    # job runs BEFORE spending dedup compute. include_input composes
-    # it with ZERO shuffle; min_stopword_hits=1 because the synthetic
-    # vocabulary carries exactly one Gopher stopword. A clone drops
-    # iff its original drops (identical text), so the exact-dedup
-    # stage still sees duplicate pairs. (C4 line cleaning is certified
-    # standalone, not composed here: the corpus is single-line and
-    # unpunctuated, so its line rules would just drop every doc.)
-    filtered = (
-        gopher_quality_filter(base, min_stopword_hits=1, include_input=True)
-        .filter(F.col("keep"))
-        .select("doc_id", "source", "text")
-    )
-    # checkpoint the filtered survivors (r8 second pass): the gate
-    # aggregation below AND the exact-dedup chain each re-ran the whole
-    # URL + clone + Arrow-normalize + Gopher head otherwise (~1.2 s per
-    # re-run at sf0.1); the repartition prevents the AQE-coalesced
-    # 1-2-partition starvation documented at the exact checkpoint
-    filtered = filtered.repartition(
-        spark.sparkContext.defaultParallelism
-    ).localCheckpoint(eager=True)
-    # ONE gopher pass answers both gate counts (r8: the separate
-    # n_clone_filtered count re-ran the whole normalize+gopher chain)
-    # coalesce: sum over an EMPTY frame is NULL — keep the gate's
-    # diagnostic RuntimeError reachable instead of a TypeError
-    fs = filtered.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(
-            F.sum(F.when(F.col("doc_id") >= 1_000_000, 1).otherwise(0)), F.lit(0)
-        ).alias("ncl"),
-    ).first()
-    n_filtered, n_clone_filtered = fs["n"], fs["ncl"]
-
-    # checkpoint the exact-dedup survivors (r8): substring_dedup
-    # consumes its input THREE times (gram pass for the df count, gram
-    # pass for coverage, and the final strip join) — un-checkpointed,
-    # each consumer re-ran the whole URL + normalize + Gopher + dedup
-    # chain. The repartition before the checkpoint matters as much as
-    # the checkpoint: AQE coalesces this small shuffle to 1-2
-    # partitions (64 MB advisory vs a ~2 MB compressed exchange), and
-    # every downstream Arrow/md5-heavy pass would inherit 1-2-task
-    # parallelism from the checkpoint blocks (guide §2.5 input skew /
-    # §1.2 — measured 7.2 s → ~3 s for this segment at sf0.1).
-    # materialize_grams=True additionally collapses the two gram
-    # passes into one (the documented small-corpus fast path).
-    par = spark.sparkContext.defaultParallelism
-    exact = (
-        drop_exact_duplicates(filtered, "doc_id", "text")
-        .repartition(par)
-        .localCheckpoint(eager=True)
-    )
-    sub = substring_dedup(
-        exact, n=8, min_df=4, materialize_grams=True
-    ).localCheckpoint(eager=True)
-    # normalize-stage gate counts: clones are byte-unequal to their
-    # originals until normalization, so "clones entered dedup AND none
-    # survived it" certifies the stage actually unified them; one agg
-    # over the checkpoint blocks answers both counts
-    es = sub.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(
-            F.sum(F.when(F.col("doc_id") >= 1_000_000, 1).otherwise(0)), F.lit(0)
-        ).alias("ncl"),
-    ).first()
-    n_exact, n_clone_exact = es["n"], es["ncl"]
-
-    # per-doc strip flags RIDE THROUGH the rest of the chain so the
-    # binding gates below certify that a stripped doc SURVIVED to the
-    # budgeted output (a stage that strips only docs that later drop
-    # would be vacuous w.r.t. the certified manifest — review catch)
-    intra = strip_repeated_runs(
-        sub.withColumn("__cross_stripped", F.col("n_removed") > 0), n=8
-    ).withColumn("__intra_stripped", F.col("n_removed") > 0)
-
-    red = intra.select(
-        "doc_id",
-        "source",
-        pii_redact("text").alias("text"),
-        (pii_redact("text") != F.col("text")).alias("__was_redacted"),
-        "__cross_stripped",
-        "__intra_stripped",
-    ).localCheckpoint(eager=True)  # several consumers; don't re-run the Arrow strip
-    eval_df = red.filter(hash_bucket("doc_id", salt=":eval") < 40_000).select(
-        F.substring("text", 1, 200).alias("text")
-    )
-    hits = contamination_hits(
-        red, eval_gram_hashes(eval_df, "text", n=8), "doc_id", "text", n=8
-    )
-    # checkpoint: three consumers (the MinHash pass, the survivor
-    # anti-join, and the n_decon gate) each re-ran the whole
-    # eval-gram + contamination-join DAG before r8
-    # repartition before the checkpoint: the anti-join output AQE-
-    # coalesces to 1-2 partitions at this byte size, and the MinHash
-    # shingle explode + 64-permutation fold downstream is the single
-    # heaviest per-row compute in the pipeline (measured 4.6 s on 1-2
-    # cores → ~1.5 s fanned)
-    decon = (
-        red.join(hits.select("doc_id"), "doc_id", "left_anti")
-        .repartition(par)
-        .localCheckpoint(eager=True)
-    )
-
-    pairs = minhash_near_duplicates(
-        decon, "doc_id", "text", n=5, k=64, bands=16, threshold=0.6, hash_fn="md5"
-    )
-    drops = connected_components(pairs).filter(F.col("doc") != F.col("cluster"))
-    surv = (
-        decon.join(drops.select(F.col("doc").alias("doc_id")), "doc_id", "left_anti")
-        .repartition(par)  # LM bucket hashing downstream is md5-per-token
-        .localCheckpoint(eager=True)
-    )  # LM model + scoring + budget all read it
-
-    # stage (late r7): CCNet LM-perplexity tiering over the SURVIVORS'
-    # cleaned text — the trusted counting subset is the ':lmT' 10% hash
-    # of the survivors themselves (CCNet's in-domain side), tail third
-    # drops. Composition under test: the LM sees redacted+stripped
-    # text, so a stale-text stage upstream would shift every tier.
-    tiers = ppl_tiers(
-        lm_perplexity(
-            surv,
-            surv.filter(hash_bucket("doc_id", salt=":lmT") < 100_000),
-            id_col="doc_id",
-            text_col="text",
-            n_buckets=4096,
+    # per-doc strip/redact flags RIDE THROUGH the rest of the chain so
+    # the binding gates below certify that a stripped doc SURVIVED to
+    # the budgeted output (a stage that strips only docs that later drop
+    # would be vacuous w.r.t. the certified manifest — review catch);
+    # a doc was redacted iff its text hash changed across the PII stage
+    ride = {
+        "substring_strip": lambda df: df.withColumn(
+            "__cross_stripped", F.col("n_removed") > 0
         ),
-        id_col="doc_id",
-    )
-    # checkpoint: the budget window AND the n_lmkept gate both consume
-    # this — before r8 the gate count re-ran the entire LM model +
-    # scoring chain a second time (the single most expensive re-run in
-    # the pipeline, ~2 s at sf0.1)
-    lmkept = (
-        tiers.filter(F.col("ppl_tier").isin("head", "middle"))
-        .drop("avg_nll", "n_scored", "n_backoff", "ppl_tier")
-        .localCheckpoint(eager=True)
-    )
-    budgeted = take_token_budget(
-        lmkept.withColumn("__nt", token_count("text")), "source", "doc_id", "__nt", 400
-    ).localCheckpoint(eager=True)
+        "intra_strip": lambda df: df.withColumn(
+            "__intra_stripped", F.col("n_removed") > 0
+        ).withColumn("__pre_pii", F.xxhash64("text")),
+        "pii_redact": lambda df: df.withColumn(
+            "__was_redacted", F.xxhash64("text") != F.col("__pre_pii")
+        ).drop("__pre_pii"),
+    }
+    seen: dict[str, DataFrame] = {}
 
-    # four independent gate jobs over checkpoint blocks — run them
-    # concurrently (r8, guide §2.6)
-    stage, r_decon, r_surv, r_lmkept = _first_parallel(
-        budgeted.agg(
+    def tap(name: str, df: DataFrame) -> DataFrame:
+        seen[name] = df = ride.get(name, lambda x: x)(df)
+        return df
+
+    packed = corpus.run(base, steps[1:], tap)
+
+    def n_and_clones(df: DataFrame) -> DataFrame:
+        # coalesce: sum over an EMPTY frame is NULL — keep the gate's
+        # diagnostic RuntimeError reachable instead of a TypeError
+        return df.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.coalesce(
+                F.sum(F.when(F.col("doc_id") >= 1_000_000, 1).otherwise(0)), F.lit(0)
+            ).alias("ncl"),
+        )
+
+    # the gate jobs read checkpoint blocks only — run them concurrently
+    # (r8, guide §2.6). Normalize-stage gate: clones are byte-unequal to
+    # their originals until normalization, so "clones entered dedup AND
+    # none survived it" certifies the stage actually unified them.
+    fs, es, stage, r_decon, r_surv, r_lmkept, r_chunk = _first_parallel(
+        n_and_clones(seen["quality_filter"]),
+        n_and_clones(seen["substring_strip"]),
+        seen["token_budget"].agg(
             F.count(F.lit(1)).alias("n_budgeted"),
             F.max(F.col("__was_redacted").cast("int")).alias("any_redact"),
             F.max(F.col("__cross_stripped").cast("int")).alias("any_cross"),
             F.max(F.col("__intra_stripped").cast("int")).alias("any_intra"),
         ),
-        decon.agg(F.count(F.lit(1)).alias("n")),
-        surv.agg(F.count(F.lit(1)).alias("n")),
-        lmkept.agg(F.count(F.lit(1)).alias("n")),
+        seen["decontaminate"].agg(F.count(F.lit(1)).alias("n")),
+        seen["neardup_drop"].agg(F.count(F.lit(1)).alias("n")),
+        seen["lm_tier_drop"].agg(F.count(F.lit(1)).alias("n")),
+        seen["chunk"].filter(F.col("chunk_index") >= 1).select("chunk_index"),
     )
+    n_filtered, n_clone_filtered = fs["n"], fs["ncl"]
+    n_exact, n_clone_exact = es["n"], es["ncl"]
     n_decon, n_surv, n_lmkept = r_decon["n"], r_surv["n"], r_lmkept["n"]
     binding = {
         "normalize_unify": n_clone_filtered > 0 and n_clone_exact == 0,
@@ -6536,25 +6426,16 @@ def q_corpus_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         "neardup_drop": n_surv < n_decon,
         "lm_tier_drop": 0 < n_lmkept < n_surv,
         "token_budget": stage.n_budgeted < n_lmkept,
+        "chunking": r_chunk is not None,  # a multi-chunk doc survived
     }
     dead = [k for k, ok in binding.items() if not ok]
     if dead:
         raise RuntimeError(f"vacuous pipeline stage(s): {dead}")
 
-    ch = chunk_documents(budgeted, chunk_tokens=24, stride=12).select(
-        F.concat_ws(":", F.col("doc_id").cast("string"), F.col("chunk_index")).alias(
-            "chunk_uid"
-        ),
-        "n_chunk_tokens",
-        F.md5("chunk_text").alias("chunk_fp"),
-        "chunk_index",
-    ).localCheckpoint(eager=True)
-    if ch.filter(F.col("chunk_index") >= 1).limit(1).count() == 0:
-        raise RuntimeError("vacuous pipeline chunking: no multi-chunk doc survived")
-    packed = pack_next_fit(
-        ch, "chunk_uid", "n_chunk_tokens", cap_tokens=40, n_shards=8
+    chunk_fp = seen["chunk"].select(
+        corpus.chunk_uid().alias("chunk_uid"), F.md5("chunk_text").alias("chunk_fp")
     )
-    out = packed.join(ch.select("chunk_uid", "chunk_fp"), "chunk_uid").select(
+    out = packed.join(chunk_fp, "chunk_uid").select(
         "chunk_uid",
         "shard",
         "bin",

@@ -18,6 +18,7 @@ Prints one line per helper: name, best, median, all samples.
 from __future__ import annotations
 
 import os
+import statistics
 import sys
 import time
 
@@ -77,7 +78,7 @@ def main() -> None:
                 samples.append(round(time.time() - t0, 3))
             print(
                 f"{name:40s} best={min(samples):7.3f} "
-                f"med={sorted(samples)[len(samples) // 2]:7.3f} {samples}"
+                f"med={statistics.median(samples):7.3f} {samples}"
             )
         except Exception as ex:  # keep the sweep going
             print(f"{name:40s} ERROR {str(ex)[:120]}")

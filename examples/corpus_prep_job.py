@@ -1,14 +1,16 @@
 """spark-submit entry point for the composed LLM-corpus preparation
-pipeline — the certified hygiene chain (corpus_pipeline_e2e's operator
-composition) over an arbitrary documents table:
+pipeline — the certified hygiene chain over an arbitrary documents
+table. The stage list, each stage's operator call and the
+materialization rule live in ``schema_drift_detector_spark.plans.corpus``
+(the same composition the board entry corpus_pipeline_e2e certifies):
 
     [URL governance (--url-col)] → Unicode normalization → Gopher
     quality filter → exact dedup → cross-doc boilerplate strip →
-    intra-doc repetition strip → PII redaction → benchmark
-    decontamination → MinHash near-dup drop → CCNet LM-perplexity
-    tier drop → mixing (per-source token budget, or mT5-style
-    temperature quotas with --mix temperature) → context chunking →
-    next-fit sequence packing
+    intra-doc repetition strip → PII redaction → [benchmark
+    decontamination (--eval-docs)] → MinHash near-dup drop → CCNet
+    LM-perplexity tier drop → mixing (per-source token budget, or
+    mT5-style temperature quotas with --mix temperature) → context
+    chunking → next-fit sequence packing
 
     zip -r engine.zip schema_drift_detector_spark
     spark-submit --py-files engine.zip examples/corpus_prep_job.py \
@@ -16,13 +18,16 @@ composition) over an arbitrary documents table:
         --out /path/to/prep_out \
         [--eval-docs /path/to/eval.parquet]   # decontamination source
         [--budget-tokens 1000000] [--chunk-tokens 2048] [--stride 1024] \
-        [--pack-cap 4096] [--shards 64] [--min-words 50] [--skip-quality] \
-        [--skip-normalize] \
-        [--skip-lm-tier] [--lm-buckets 4096] [--lm-train-frac 0.1] \
+        [--pack-cap 4096] [--shards 64] [--min-stopword-hits 2] \
+        [--skip-quality] [--skip-normalize] [--skip-lm-tier] \
         [--url-col url --url-blocklist evil.example \
          --url-hard-kw /xxx --url-soft-kw casino=2,free=1 \
          --url-soft-threshold 3 --url-drop-null] \
         [--mix temperature --mix-total 0 --mix-alpha 0.3]
+
+The fixed stage parameters (Gopher min words 50, gram n 8, boilerplate
+min df 4, LSH threshold 0.6, 4096 LM buckets, 10% LM training subset)
+are constants of plans/corpus.py.
 
 Input schema: (doc_id long, source string, text string) — extra
 columns pass through to the survivors output, EXCEPT the reserved
@@ -34,10 +39,6 @@ under --out:
   packed/      the packed-sequence manifest (chunk_uid, shard, bin,
                n_tokens, truncated)
   stats.json   per-stage row counts (drop-rate audit)
-
-Stage knobs mirror the certified operators' defaults; every stage is
-the exact operator the entry-board certifies (nothing re-implemented
-here). Decontamination is skipped unless --eval-docs is given.
 """
 
 from __future__ import annotations
@@ -47,6 +48,20 @@ import json
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+# stage → (stats.json key, output directory under --out)
+AUDIT = {
+    "url_governance": ("after_url_governance", None),
+    "quality_filter": ("after_quality_filter", None),
+    "exact_dedup": ("after_exact_dedup", None),
+    "decontaminate": ("after_decontamination", None),
+    "neardup_drop": ("after_neardup_drop", None),
+    "lm_tier_drop": ("after_lm_tier_drop", None),
+    "token_budget": ("after_token_budget", "survivors"),
+    "temperature_mix": ("after_temperature_mix", "survivors"),
+    "chunk": ("chunks", "chunks"),
+    "pack": ("packed_chunks", "packed"),
+}
 
 
 def main() -> None:
@@ -59,21 +74,20 @@ def main() -> None:
     ap.add_argument("--stride", type=int, default=1024)
     ap.add_argument("--pack-cap", type=int, default=4096)
     ap.add_argument("--shards", type=int, default=64)
-    ap.add_argument("--min-words", type=int, default=50)
     ap.add_argument("--min-stopword-hits", type=int, default=2)
-    ap.add_argument("--gram-n", type=int, default=8)
-    ap.add_argument("--boilerplate-min-df", type=int, default=4)
-    ap.add_argument("--lsh-threshold", type=float, default=0.6)
-    ap.add_argument("--skip-quality", action="store_true")
+    # each --skip-* leaves its stage out of the list
+    skip = dict(dest="skip", action="append_const", default=[])
+    ap.add_argument("--skip-quality", const="quality_filter", **skip)
     ap.add_argument(
         "--skip-normalize",
-        action="store_true",
+        const="normalize",
+        **skip,
         help="skip Unicode normalization (strip controls, NFC, space "
         "mapping, whitespace collapse) — ON by default because "
         "un-normalized text defeats every downstream dedup/decontam "
         "gram identity",
     )
-    ap.add_argument("--skip-lm-tier", action="store_true")
+    ap.add_argument("--skip-lm-tier", const="lm_tier_drop", **skip)
     ap.add_argument(
         "--url-col",
         help="run URL governance FIRST over this column (RefinedWeb "
@@ -120,37 +134,9 @@ def main() -> None:
         "surviving docs)",
     )
     ap.add_argument("--mix-alpha", type=float, default=0.3)
-    ap.add_argument("--lm-buckets", type=int, default=4096)
-    ap.add_argument(
-        "--lm-train-frac",
-        type=float,
-        default=0.1,
-        help="deterministic doc_id-hash fraction of the survivors used "
-        "as the LM's trusted counting corpus (CCNet's in-domain side)",
-    )
     args = ap.parse_args()
 
-    from schema_drift_detector_spark.functions.pii import pii_redact
-    from schema_drift_detector_spark.functions.text import token_count
-    from schema_drift_detector_spark.operators.cleaning import gopher_quality_filter
-    from schema_drift_detector_spark.operators.decontam import (
-        contamination_hits,
-        eval_gram_hashes,
-    )
-    from schema_drift_detector_spark.operators.dedup import (
-        connected_components,
-        drop_exact_duplicates,
-        minhash_near_duplicates,
-    )
-    from schema_drift_detector_spark.operators.packing import (
-        chunk_documents,
-        pack_next_fit,
-    )
-    from schema_drift_detector_spark.operators.sampling import take_token_budget
-    from schema_drift_detector_spark.operators.substring import (
-        strip_repeated_runs,
-        substring_dedup,
-    )
+    from schema_drift_detector_spark.plans import corpus
     from schema_drift_detector_spark.sources.io import read_table
 
     spark = SparkSession.builder.appName("corpus-prep").getOrCreate()
@@ -160,14 +146,15 @@ def main() -> None:
     # n_tokens/n_removed are produced-and-consumed internally by the
     # strip stages; a caller's same-named columns would be silently
     # destroyed — fail loud instead (the gopher clash-guard discipline)
-    reserved_names = {"n_tokens", "n_removed"}
-    if not args.skip_lm_tier:
-        reserved_names |= {"avg_nll", "n_scored", "n_backoff", "ppl_tier"}
+    reserved_names = set(corpus.STRIP_COUNTERS)
+    if "lm_tier_drop" not in args.skip:
+        reserved_names |= set(corpus.LM_COLUMNS)
     reserved = reserved_names & set(docs.columns)
     if reserved:
         raise SystemExit(
             f"input carries reserved column(s) {sorted(reserved)} — rename them"
         )
+    small = corpus.small_input(docs)
     stats["input"] = docs.count()
 
     # NULL text can never survive the chain usefully (token_count on
@@ -176,11 +163,8 @@ def main() -> None:
     docs = docs.filter(F.col("text").isNotNull())
     stats["after_null_text_drop"] = docs.count()
 
+    url = None
     if args.url_col:
-        # stage -1: URL governance — the crawl-record drop, before any
-        # text stage (the RefinedWeb ordering)
-        from schema_drift_detector_spark.functions.urlmeta import url_verdict
-
         block = [d for d in args.url_blocklist.split(",") if d]
         hard = [k for k in args.url_hard_kw.split(",") if k]
         soft = {}
@@ -200,149 +184,39 @@ def main() -> None:
             )
         if args.url_col not in docs.columns:
             raise SystemExit(f"input has no column {args.url_col!r}")
-        if args.url_drop_null:
-            docs = docs.filter(F.col(args.url_col).isNotNull())
-        docs = docs.filter(
-            url_verdict(
-                args.url_col, block, hard, soft, args.url_soft_threshold
-            ).isNull()
-        )
-        stats["after_url_governance"] = docs.count()
-
-    if not args.skip_normalize:
-        # stage 0: Unicode normalization (zero-shuffle Arrow scan) —
-        # row-preserving, so no stats entry; everything downstream
-        # (dedup grams, PII regexes, LM counts, token budgets) reads
-        # the normalized text
-        from schema_drift_detector_spark.functions.normalize import (
-            normalize_text_arrow,
+        url = corpus.UrlRules(
+            args.url_col, block, hard, soft, args.url_soft_threshold, args.url_drop_null
         )
 
-        docs = docs.select(
-            *[c for c in docs.columns if c != "text"],
-            normalize_text_arrow("text").alias("text"),
-        )
-
-    if not args.skip_quality:
-        from schema_drift_detector_spark.operators.cleaning import GOPHER_RULE_COLS
-
-        docs = (
-            gopher_quality_filter(
-                docs,
-                min_words=args.min_words,
-                min_stopword_hits=args.min_stopword_hits,
-                include_input=True,
-            )
-            .filter(F.col("keep"))
-            .drop("n_words", "mean_word_len", "keep", *GOPHER_RULE_COLS)
-        )
-        stats["after_quality_filter"] = docs.count()
-
-    # checkpoint after exact dedup: both the count and the two gram
-    # passes read it (un-checkpointed, each would replay the scan +
-    # quality filter + md5 window)
-    docs = drop_exact_duplicates(docs, "doc_id", "text").localCheckpoint(eager=True)
-    stats["after_exact_dedup"] = docs.count()
-
-    docs = substring_dedup(docs, n=args.gram_n, min_df=args.boilerplate_min_df)
-    docs = strip_repeated_runs(docs, n=args.gram_n).drop("n_tokens", "n_removed")
-    docs = docs.select(
-        *[c for c in docs.columns if c != "text"], pii_redact("text").alias("text")
-    ).localCheckpoint(eager=True)  # several consumers; don't re-run the strips
-
-    if args.eval_docs:
-        eval_df = read_table(spark, args.eval_docs)
-        hits = contamination_hits(
-            docs,
-            eval_gram_hashes(eval_df, "text", n=args.gram_n),
-            "doc_id",
-            "text",
-            n=args.gram_n,
-        )
-        docs = docs.join(hits.select("doc_id"), "doc_id", "left_anti").localCheckpoint(
-            eager=True
-        )
-        stats["after_decontamination"] = docs.count()
-
-    pairs = minhash_near_duplicates(
-        docs, "doc_id", "text", n=5, k=64, bands=16,
-        threshold=args.lsh_threshold, hash_fn="md5",
+    steps = corpus.stages(
+        small=small,
+        min_stopword_hits=args.min_stopword_hits,
+        mix=corpus.TemperatureMix(args.mix_total, args.mix_alpha)
+        if args.mix == "temperature"
+        else args.budget_tokens,
+        chunk_tokens=args.chunk_tokens,
+        stride=args.stride,
+        pack_cap=args.pack_cap,
+        shards=args.shards,
+        url=url,
+        eval_docs=(lambda _: read_table(spark, args.eval_docs))
+        if args.eval_docs
+        else None,
     )
-    drops = connected_components(pairs).filter(F.col("doc") != F.col("cluster"))
-    docs = docs.join(
-        drops.select(F.col("doc").alias("doc_id")), "doc_id", "left_anti"
-    ).localCheckpoint(eager=True)
-    stats["after_neardup_drop"] = docs.count()
 
-    if not args.skip_lm_tier:
-        from schema_drift_detector_spark.operators.quality_lm import (
-            lm_perplexity,
-            ppl_tiers,
-        )
-        from schema_drift_detector_spark.operators.sampling import hash_bucket
+    def audit(name, df):
+        if name in AUDIT:
+            key, out = AUDIT[name]
+            counted = df
+            if out:
+                # count the written files: the packing stage is not
+                # checkpointed, and counting it would re-run the pack fold
+                df.write.mode("overwrite").parquet(f"{args.out}/{out}")
+                counted = spark.read.parquet(f"{args.out}/{out}")
+            stats[key] = counted.count()
+        return df
 
-        # CCNet tier drop: score every survivor against a bigram LM
-        # counted from the in-domain hash subset; the 'tail' perplexity
-        # third drops (zero-token docs score NULL and drop too — they
-        # cannot contribute training tokens anyway)
-        train = docs.filter(
-            hash_bucket("doc_id", salt=":lmT")
-            < int(round(args.lm_train_frac * 1_000_000))
-        )
-        docs = (
-            ppl_tiers(
-                lm_perplexity(docs, train, n_buckets=args.lm_buckets),
-                id_col="doc_id",
-            )
-            .filter(F.col("ppl_tier").isin("head", "middle"))
-            .drop("avg_nll", "n_scored", "n_backoff", "ppl_tier")
-            .localCheckpoint(eager=True)
-        )
-        stats["after_lm_tier_drop"] = docs.count()
-
-    if args.mix == "temperature":
-        from schema_drift_detector_spark.operators.sampling import temperature_mix
-
-        # after_neardup_drop is set unconditionally just above — no
-        # stage between it and the mix changes the row count, so no
-        # extra count() action is needed (review catch)
-        n_surv = stats.get("after_lm_tier_drop", stats["after_neardup_drop"])
-        total = args.mix_total or max(1, n_surv // 2)
-        docs = temperature_mix(
-            docs, "source", "doc_id", total, alpha=args.mix_alpha
-        ).localCheckpoint(eager=True)
-        stats["after_temperature_mix"] = docs.count()
-    else:
-        docs = take_token_budget(
-            docs.withColumn("__nt", token_count("text")),
-            "source",
-            "doc_id",
-            "__nt",
-            args.budget_tokens,
-        ).drop("__nt").localCheckpoint(eager=True)
-        stats["after_token_budget"] = docs.count()
-    docs.write.mode("overwrite").parquet(f"{args.out}/survivors")
-
-    chunks = chunk_documents(
-        docs, chunk_tokens=args.chunk_tokens, stride=args.stride
-    ).localCheckpoint(eager=True)
-    stats["chunks"] = chunks.count()
-    chunks.write.mode("overwrite").parquet(f"{args.out}/chunks")
-
-    packed = pack_next_fit(
-        chunks.select(
-            F.concat_ws(
-                ":", F.col("doc_id").cast("string"), F.col("chunk_index")
-            ).alias("chunk_uid"),
-            "n_chunk_tokens",
-        ),
-        "chunk_uid",
-        "n_chunk_tokens",
-        cap_tokens=args.pack_cap,
-        n_shards=args.shards,
-    ).localCheckpoint(eager=True)
-    stats["packed_chunks"] = packed.count()
-    packed.write.mode("overwrite").parquet(f"{args.out}/packed")
+    corpus.run(docs, [s for s in steps if s.name not in args.skip], audit)
 
     line = json.dumps(stats)
     # the documented stats.json artifact (stdout alone drowns in
